@@ -197,11 +197,16 @@ class DeltaLog:
         needed = set(range(start + 1, version + 1))
         return needed.issubset(self.versions())
 
-    def checkpoint_actions(self, version: int) -> list[dict[str, Any]]:
+    def checkpoint_actions(
+        self, version: int, kind: str | None = None
+    ) -> list[dict[str, Any]]:
         """Actions stored in the checkpoint at ``version`` — the single
         ``<v>.checkpoint.parquet`` file, or every part of a complete
         multi-part ``<v>.checkpoint.<part>.<parts>.parquet`` set in part
-        order (PROTOCOL.md: parts jointly hold the action set)."""
+        order (PROTOCOL.md: parts jointly hold the action set).
+
+        ``kind`` (e.g. ``"metaData"``) reads only that action column, so a
+        metadata lookup does not convert every ``add`` row."""
         import pyarrow.parquet as pq
 
         single = os.path.join(
@@ -218,10 +223,17 @@ class DeltaLog:
                 )
         actions = []
         for path in paths:
-            for row in pq.read_table(path).to_pylist():
-                for kind, payload in row.items():
+            with pq.ParquetFile(path) as part:
+                if kind is None:
+                    table = part.read()
+                elif kind in part.schema_arrow.names:
+                    table = part.read(columns=[kind])
+                else:  # no such column, so no such action in this part
+                    continue
+            for row in table.to_pylist():
+                for name, payload in row.items():
                     if payload is not None:
-                        actions.append({kind: _strip_checkpoint_nulls(payload)})
+                        actions.append({name: _strip_checkpoint_nulls(payload)})
         return actions
 
     def actions(self, version: int) -> list[dict[str, Any]]:
@@ -271,7 +283,7 @@ class DeltaLog:
                     return action[kind]
         if cv is None:
             return None
-        for action in self.checkpoint_actions(cv):
+        for action in self.checkpoint_actions(cv, kind):
             if kind in action:
                 return action[kind]
         return None

@@ -7,7 +7,14 @@ Capability parity with the reference's ``FileStreamCheckpoint``
   crash between the two replays the SAME batch id with the SAME file set
   (at-least-once; exactly-once with idempotent ``batch_{id}`` sinks).
 - md5-sharded file index (path -> {mtime_ns, size}) so only touched shards
-  are rewritten per commit and planning never has to re-read every offset.
+  are rewritten per commit.  Planning still re-reads every committed
+  offset: ``committed_files`` unions the index with each offset's file
+  list, so one plan costs O(committed batches) JSON reads and grows with
+  the checkpoint's age (1.5–2.9× from the first tenth to the last of a
+  30–38 batch backlog, 4-core machine).  The offset pass is kept because
+  ``prune_index`` (``max_file_age``) drops index entries; the offsets are
+  then the only record that a pruned file was committed, and without them
+  such a file still in the listing would be re-queued.
 - ``allow_overwrites`` re-queues files whose mtime/size changed — a feature
   Spark's built-in FileStreamSource lacks (it keys on path only).
 - start offsets: ``earliest`` / ``latest`` / ``timestamp:<iso-or-epoch>``,

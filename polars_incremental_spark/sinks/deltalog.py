@@ -1298,6 +1298,9 @@ def write_delta_fallback(
     log = DeltaLog(table_path)
     latest = log.latest_version()
     now_ms = int(time.time() * 1000)
+    # one metadata read per append, pinned to ``latest``: every decision
+    # before the commit sees the same version (the rebase loop re-reads)
+    stored_meta = (log.table_metadata(latest) or {}) if latest is not None else {}
 
     id_specs: dict[str, dict[str, Any]] = {}
     id_generated: list[str] = []
@@ -1317,7 +1320,6 @@ def write_delta_fallback(
                 "row_tracking is create-time only; use enable_row_tracking() "
                 "to turn it on for an existing table (it backfills ids)"
             )
-        stored_meta = log.table_metadata() or {}
         stored_parts = stored_meta.get("partitionColumns") or []
         if partition_by is None:
             partition_by = list(stored_parts) or None
@@ -1363,25 +1365,23 @@ def write_delta_fallback(
     # names and the same commit's metaData action declares them.
     cm_mapping: dict[str, str] | None = None
     cm_meta_action: dict[str, Any] | None = None
-    if latest is not None:
-        cm_stored = log.table_metadata() or {}
-        if _column_mapping(cm_stored) is not None:
-            cm_merged = _merge_schema_strings(
-                cm_stored.get("schemaString"), df.schema.json()
-            )
-            cm_conf = dict(cm_stored.get("configuration") or {})
-            cm_merged, cm_new_conf = _assign_mapping_ids(cm_merged, cm_conf)
-            if cm_merged != cm_stored.get("schemaString"):
-                cm_meta_action = {
-                    "metaData": {
-                        **cm_stored,
-                        "schemaString": cm_merged,
-                        "configuration": cm_new_conf,
-                    }
+    if _column_mapping(stored_meta) is not None:
+        cm_merged = _merge_schema_strings(
+            stored_meta.get("schemaString"), df.schema.json()
+        )
+        cm_conf = dict(stored_meta.get("configuration") or {})
+        cm_merged, cm_new_conf = _assign_mapping_ids(cm_merged, cm_conf)
+        if cm_merged != stored_meta.get("schemaString"):
+            cm_meta_action = {
+                "metaData": {
+                    **stored_meta,
+                    "schemaString": cm_merged,
+                    "configuration": cm_new_conf,
                 }
-            cm_mapping = _column_mapping(
-                {"schemaString": cm_merged, "configuration": cm_new_conf}
-            )
+            }
+        cm_mapping = _column_mapping(
+            {"schemaString": cm_merged, "configuration": cm_new_conf}
+        )
     adds = _stage_data_files(df, table_path, partition_by, mapping=cm_mapping)
     actions: list[dict[str, Any]] = [
         {
@@ -1476,7 +1476,6 @@ def write_delta_fallback(
         version = 0
     else:
         version = latest + 1
-        stored_meta = log.table_metadata() or {}
         if cm_mapping is not None:
             if cm_meta_action is not None:
                 actions.append(cm_meta_action)
@@ -1539,22 +1538,19 @@ def write_delta_fallback(
                 )
                 patched = True
         if not patched:
-            base_meta = log.table_metadata() or {}
             actions.append(
                 {
                     "metaData": {
-                        **base_meta,
+                        **stored_meta,
                         "schemaString": _set_identity_hwm(
-                            base_meta["schemaString"], hwm_updates
+                            stored_meta["schemaString"], hwm_updates
                         ),
                     }
                 }
             )
     # row tracking: allocate baseRowId past the logged watermark; the
     # watermark advance commits atomically with the adds (domain metadata)
-    rt_on = row_tracking or (
-        latest is not None and _row_tracking_enabled(log.table_metadata())
-    )
+    rt_on = row_tracking or _row_tracking_enabled(stored_meta)
     if rt_on:
         new_hwm = _stamp_row_ids(
             table_path, adds, _row_id_hwm(log) if latest is not None else -1, version

@@ -183,3 +183,59 @@ def test_reader_gate_still_armed_after_expiry(spark, tmp_path):
     log = DeltaLog(path)
     with pytest.raises(Exception, match="columnMapping"):
         log.check_reader_supported()
+
+
+def test_append_reads_table_metadata_once(spark, table, monkeypatch):
+    """One metaData read per non-conflicting append, on a checkpointed
+    table whose tail also evolves the schema."""
+    checkpoint_log(table)
+    write_delta_fallback(spark.range(200, 205).withColumn("w", F.lit("x")), table)
+    calls = []
+    real = DeltaLog.table_metadata
+
+    def counting(self, *args, **kwargs):
+        calls.append(args or kwargs)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(DeltaLog, "table_metadata", counting)
+    write_delta_fallback(
+        spark.range(300, 305).withColumn("v", F.col("id") * 2).withColumn("z", F.lit(1.0)),
+        table,
+    )
+    assert len(calls) == 1
+    monkeypatch.undo()
+    log = DeltaLog(table)
+    fields = [f["name"] for f in json.loads(log.table_metadata()["schemaString"])["fields"]]
+    assert fields == ["id", "v", "w", "z"]
+    assert len(read_delta_fallback(spark, table).collect()) == 40
+
+
+def _replayed(log: DeltaLog, kind: str):
+    """Latest ``kind`` action by full replay: every checkpoint row, then
+    every commit after it."""
+    cv = log.checkpoint_version()
+    found = None
+    for action in log.checkpoint_actions(cv):
+        found = action.get(kind, found)
+    for _, action in log.replay_actions(cv, log.latest_version()):
+        found = action.get(kind, found)
+    return found
+
+
+@pytest.mark.parametrize("tail", [0, 2])
+@pytest.mark.parametrize("parts", [None, 3])
+def test_effective_action_projection_matches_full_replay(spark, table, tail, parts):
+    active = len(DeltaLog(table).snapshot_files(3))  # JSON replay, no checkpoint yet
+    checkpoint_log(table, parts=parts)
+    for i in range(tail):
+        write_delta_fallback(spark.range(i).withColumn("v", F.col("id") * 2), table)
+    log = DeltaLog(table)
+    for kind in ("metaData", "protocol"):
+        assert log._effective_action(kind, None) == _replayed(log, kind)
+    # the projected read returns only the asked-for action column
+    cv = log.checkpoint_version()
+    projected = log.checkpoint_actions(cv, "metaData")
+    assert projected and all(list(a) == ["metaData"] for a in projected)
+    full = log.checkpoint_actions(cv)
+    assert [a for a in full if "metaData" in a] == projected
+    assert sum("add" in a for a in full) == active
